@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * interleaved-floor estimator from BENCH/BASELINE.md (this host's
   * CPU-steal windows outlast any back-to-back rep loop).
   *
-  * Usage: runMain graft.bench.StressBench [cores]
+  * Usage: runMain graft.bench.StressBench
   */
 object StressBench {
 
@@ -90,19 +90,9 @@ object StressBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cores = args.lift(0).getOrElse("32")
     val cycles = sys.env.getOrElse("GRAFT_STRESS_CYCLES", "3").toInt
     val mult = sys.env.getOrElse("GRAFT_STRESS_MULT", "10").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSpark.session()
 
     val work = java.nio.file.Files.createTempDirectory("graft_stress").toString
     val scales = Seq("x1" -> (5000L, 2000L),

@@ -13,14 +13,7 @@ object WriteCorpus {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/graft_corpus")
     val nConvs = args.lift(1).map(_.toInt).getOrElse(500)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-gen")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark.session()
     write(spark, outDir, nConvs)
     spark.stop()
   }

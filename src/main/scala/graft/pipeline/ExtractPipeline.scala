@@ -46,20 +46,23 @@ object ExtractPipeline {
         s"cellsOut=${cellsOut.value} blocksKept=${blocksKept.value} blocksDropped=${blocksDropped.value}"
   }
 
+  /** Salt range of the extraction shuffle key: one conversation's
+    * turns spread over up to this many partitions. */
+  private val SaltBuckets = 64
+
   /** Extraction stage. `partitions <= 0` leaves the input partitioning
     * untouched (small/test inputs); otherwise salted-repartitions so
     * skewed conversations spread across the cluster. */
   def extract(
       turns: Dataset[Turn],
       metrics: Metrics,
-      partitions: Int = 0,
-      saltBuckets: Int = 64): Dataset[ExtractedTurn] = {
+      partitions: Int = 0): Dataset[ExtractedTurn] = {
     val spark = turns.sparkSession
     import spark.implicits._
     val repartitioned =
       if (partitions <= 0) turns
       else turns.repartition(partitions,
-        xxhash64($"conv_id", pmod($"turn_idx", lit(saltBuckets))))
+        xxhash64($"conv_id", pmod($"turn_idx", lit(SaltBuckets))))
     repartitioned.mapPartitions { it =>
       // one pooled kernel + counter set per partition; counters flush
       // into accumulators when the partition iterator drains

@@ -8,15 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The native codegen dot product must equal the HOF formulation
   * bit-for-bit (same left-to-right summation), handle nulls, and work
   * through both the Column API and SQL registration. */
-class ArrayDotSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-arraydot-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("WARN") }
+class ArrayDotSpec extends AnyFunSuite with SharedSpark {
 
   private def hofDot = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)

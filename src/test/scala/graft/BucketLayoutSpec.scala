@@ -1,7 +1,6 @@
 package graft
 
 import graft.pipeline.BucketLayout
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,15 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * pid names — so a Spark release that changed HashPartitioning's
   * internals would fail here loudly instead of silently scattering the
   * durable write back to tasks × buckets files. */
-class BucketLayoutSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-bucketlayout-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("WARN") }
+class BucketLayoutSpec extends AnyFunSuite with SharedSpark {
 
   test("exactRepartition places every row on the partition its pid names") {
     import spark.implicits._

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -13,16 +12,7 @@ import java.sql.Timestamp
   * (inclusive match, tied timestamps, the no-prior-order null path —
   * absent from the driver data, where every event has a prior order).
   */
-class ClusterAsofSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-cluster-asof-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("WARN") }
+class ClusterAsofSpec extends AnyFunSuite with SharedSpark {
 
   test("bestMatch: shuffle leg ≡ broadcast leg ≡ brute force (tiers, ties, misses)") {
     import spark.implicits._
@@ -165,7 +155,7 @@ class ClusterAsofSpec extends AnyFunSuite {
 
   test("release() returns executor storage to baseline after a query") {
     import spark.implicits._
-    // the session is shared across suites (getOrCreate), so other
+    // the session is shared across suites (SharedSpark), so other
     // modules' long-lived caches (e.g. the bom-assembly memo) may be
     // resident — assert the DELTA this query adds is fully released,
     // not an absolute-zero storage state

@@ -1,22 +1,12 @@
 package graft
 
 import graft.operators.Fn
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Column/helper library correctness: the scalable two-level ordered
   * index and the footer-statistic row count. */
-class FnSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-fn-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("WARN") }
+class FnSpec extends AnyFunSuite with SharedSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
 

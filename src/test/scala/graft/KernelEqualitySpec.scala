@@ -140,31 +140,35 @@ class KernelEqualitySpec extends AnyFunSuite {
   }
 
   test("FastScan never throws and equals jackson on fuzzed JSON-ish bytes") {
-    val rnd = new Random(31L)
-    val alphabet = "{}[]\",:0123456789.eE+-qtcwh lines rects col boxes\\u00d8\n\t"
-    for (i <- 0 until 3000) {
-      val len = rnd.nextInt(80)
-      val junk = "{" + Array.fill(len)(alphabet(rnd.nextInt(alphabet.length))).mkString
-      val a = PayloadCodec.decode(junk)
-      val b = PayloadCodec.decodeJackson(junk)
-      assert(a.boxes.toSeq == b.boxes.toSeq, s"#$i: $junk")
-      assert(a.lines.toSeq == b.lines.toSeq && a.rects.toSeq == b.rects.toSeq, s"#$i: $junk")
-      assert((a.w, a.h, a.col) == (b.w, b.h, b.col), s"#$i: $junk")
-    }
-    // mutations of VALID payloads (truncations + single-char flips)
-    val corpus = TranscriptGen.corpus(nConvs = 5)
-    val payloads = corpus.turns.filter(_.tool != Tool.HtmlMain).map(_.text).take(50)
-    for (p <- payloads; _ <- 0 until 6) {
-      val mutated =
-        if (rnd.nextBoolean()) p.substring(0, rnd.nextInt(p.length))
-        else {
-          val pos = rnd.nextInt(p.length)
-          p.substring(0, pos) + alphabet(rnd.nextInt(alphabet.length)) + p.substring(pos + 1)
-        }
-      val a = PayloadCodec.decode(mutated)
-      val b = PayloadCodec.decodeJackson(mutated)
-      assert(a.boxes.toSeq == b.boxes.toSeq, mutated.take(120))
-      assert((a.w, a.h, a.col) == (b.w, b.h, b.col), mutated.take(120))
+    val alphabet =
+      "{}[]\",:0123456789.eE+-qtcwh lines rects col boxes\\u00d8\n\t truefalsn"
+    for (seed <- Seq(31L, 7919L, 15838L, 23757L)) {
+      val rnd = new Random(seed)
+      for (i <- 0 until 3000) {
+        val len = rnd.nextInt(80)
+        val junk = "{" + Array.fill(len)(alphabet(rnd.nextInt(alphabet.length))).mkString
+        val a = PayloadCodec.decode(junk)
+        val b = PayloadCodec.decodeJackson(junk)
+        assert(a.boxes.toSeq == b.boxes.toSeq, s"seed $seed #$i: $junk")
+        assert(a.lines.toSeq == b.lines.toSeq && a.rects.toSeq == b.rects.toSeq,
+          s"seed $seed #$i: $junk")
+        assert((a.w, a.h, a.col) == (b.w, b.h, b.col), s"seed $seed #$i: $junk")
+      }
+      // mutations of VALID payloads (truncations + single-char flips)
+      val corpus = TranscriptGen.corpus(nConvs = 5, seed = seed)
+      val payloads = corpus.turns.filter(_.tool != Tool.HtmlMain).map(_.text).take(50)
+      for (p <- payloads; _ <- 0 until 6) {
+        val mutated =
+          if (rnd.nextBoolean()) p.substring(0, rnd.nextInt(p.length))
+          else {
+            val pos = rnd.nextInt(p.length)
+            p.substring(0, pos) + alphabet(rnd.nextInt(alphabet.length)) + p.substring(pos + 1)
+          }
+        val a = PayloadCodec.decode(mutated)
+        val b = PayloadCodec.decodeJackson(mutated)
+        assert(a.boxes.toSeq == b.boxes.toSeq, s"seed $seed: ${mutated.take(120)}")
+        assert((a.w, a.h, a.col) == (b.w, b.h, b.col), s"seed $seed: ${mutated.take(120)}")
+      }
     }
   }
 

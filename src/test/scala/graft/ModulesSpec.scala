@@ -2,23 +2,13 @@ package graft
 
 import graft.operators.Multimodal
 import graft.streaming.StreamingExtract
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 /** Multimodal plumbing + Structured Streaming parity with the batch
   * pipeline. */
-class ModulesSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-modules-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("WARN") }
+class ModulesSpec extends AnyFunSuite with SharedSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
 

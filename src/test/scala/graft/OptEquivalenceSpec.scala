@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,16 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * end-to-end outputs; these tests localize a failure to the specific
   * rewritten kernel.
   */
-class OptEquivalenceSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-optequiv-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("WARN") }
+class OptEquivalenceSpec extends AnyFunSuite with SharedSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
 

@@ -4,7 +4,6 @@ import graft.gen.TranscriptGen
 import graft.model._
 import graft.oracle.Oracle
 import graft.pipeline.{ExtractPipeline, ResumableExtract}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -12,16 +11,7 @@ import java.nio.file.Files
 /** The Spark half of the per-turn-equality gate: pipeline output must
   * equal the plain-Scala oracle for every turn, independent of input
   * order and partitioning, and resume must be idempotent. */
-class PipelineSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-pipeline-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("WARN") }
+class PipelineSpec extends AnyFunSuite with SharedSpark {
 
   private lazy val corpus = TranscriptGen.corpus(nConvs = 40)
 
@@ -314,11 +304,10 @@ class PipelineSpec extends AnyFunSuite {
     }
     try {
       val turns = spark.createDataset(corpus.turns)
-      val processed = ResumableExtract.run(spark, turns, io, nBuckets = 4,
-        partitions = 0, runId = "cat")
+      val processed = ResumableExtract.run(spark, turns, io, nBuckets = 4, runId = "cat")
       assert(processed == Set(0, 1, 2, 3))
-      assert(ResumableExtract.run(spark, turns, io, nBuckets = 4,
-        partitions = 0, runId = "cat").isEmpty, "completed run must be a no-op")
+      assert(ResumableExtract.run(spark, turns, io, nBuckets = 4, runId = "cat").isEmpty,
+        "completed run must be a no-op")
       // catalog data == plain-parquet pipeline data
       val got = io.read(spark, "data")
         .select("conv_id", "turn_idx", "extracted_text")
@@ -332,8 +321,7 @@ class PipelineSpec extends AnyFunSuite {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$wh/lineage"))
       io.append(spark.createDataFrame(
         spark.sparkContext.parallelize(kept.toIndexedSeq), keep.schema), "lineage")
-      val resumed = ResumableExtract.run(spark, turns, io, nBuckets = 4,
-        partitions = 0, runId = "cat2")
+      val resumed = ResumableExtract.run(spark, turns, io, nBuckets = 4, runId = "cat2")
       assert(resumed == Set(2, 3))
       val after = io.read(spark, "data")
         .select("conv_id", "turn_idx", "extracted_text")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan regression guards: the scale properties the queries
@@ -9,16 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * to a cartesian product or a sort-based aggregate — the r1 verdict
   * flagged exactly such shapes; these assertions keep them fixed.
   */
-class PlanShapeSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-planshape-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("WARN") }
+class PlanShapeSpec extends AnyFunSuite with SharedSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
 

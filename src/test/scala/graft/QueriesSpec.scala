@@ -1,22 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Smoke guard for the driver contract: every SparkEntry query must
   * plan, execute, and produce rows on sf0.001 (cross-engine value
   * parity is enforced by the driver's DuckDB gate; this spec catches
   * in-repo regressions early). */
-class QueriesSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-queries-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("WARN") }
+class QueriesSpec extends AnyFunSuite with SharedSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
 

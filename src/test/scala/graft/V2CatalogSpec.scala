@@ -2,7 +2,6 @@ package graft
 
 import graft.pipeline.{IcebergTableIO, ResumableExtract}
 import graft.v2.FakeV2Catalog
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
@@ -22,17 +21,9 @@ import scala.jdk.CollectionConverters._
   * overwrite), the recorded mode and the resulting table contents
   * would both betray it.
   */
-class V2CatalogSpec extends AnyFunSuite with BeforeAndAfterEach {
+class V2CatalogSpec extends AnyFunSuite with SharedSpark with BeforeAndAfterEach {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-v2-catalog-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.catalog.fakev2", classOf[FakeV2Catalog].getName)
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("WARN") }
+  locally { spark.conf.set("spark.sql.catalog.fakev2", classOf[FakeV2Catalog].getName) }
 
   override def beforeEach(): Unit = FakeV2Catalog.reset()
 
@@ -91,8 +82,7 @@ class V2CatalogSpec extends AnyFunSuite with BeforeAndAfterEach {
     io.overwritePartitions(partial, "data", "bucket") // creates the table
     assert(io.read(spark, "data").count() < full.count())
 
-    val done = ResumableExtract.run(spark, turns, io, nBuckets = 4,
-      partitions = 0, runId = "crash")
+    val done = ResumableExtract.run(spark, turns, io, nBuckets = 4, runId = "crash")
     assert(done == Set(0, 1, 2, 3), "all buckets pending: no lineage existed")
     val data = io.read(spark, "data")
     assert(data.count() == corpus.turns.size, "partial bucket must be replaced")
@@ -106,8 +96,7 @@ class V2CatalogSpec extends AnyFunSuite with BeforeAndAfterEach {
     import spark.implicits._
     val corpus = graft.gen.TranscriptGen.corpus(nConvs = 12)
     val turns = spark.createDataset(corpus.turns)
-    val done = ResumableExtract.run(spark, turns, io, nBuckets = 4,
-      partitions = 0, runId = "v2run")
+    val done = ResumableExtract.run(spark, turns, io, nBuckets = 4, runId = "v2run")
     assert(done == Set(0, 1, 2, 3))
     val data = io.read(spark, "data")
     assert(data.count() == corpus.turns.size)
@@ -119,7 +108,7 @@ class V2CatalogSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(events.count(_ == "ns.data:overwriteDynamic") >= 0) // may be 0: first write created
     // resume: nothing pending, no further table writes
     val evBefore = events.size
-    assert(ResumableExtract.run(spark, turns, io, 4, 0, "v2run2") == Set.empty)
+    assert(ResumableExtract.run(spark, turns, io, 4, "v2run2") == Set.empty)
     assert(events.size == evBefore, "resume no-op must not write")
   }
 }
